@@ -47,7 +47,10 @@ final class FrontierStore(val workDir: String) {
       hostState: Seq[String],
       counters: Seq[String],
       frontierRows: Long, // live-view row count → auto-finish without a Spark job
-      bloom: Seq[String] = Nil, // Bloom shard table paths
+      // shard dirs of the retired Bloom seen-filter, listed only by
+      // manifests written before its removal; kept live for vacuum until
+      // the next commit, which no longer writes the key
+      bloom: Seq[String] = Nil,
       waveCounters: Map[String, Long] = Map.empty, // this wave's counters (lineage)
       frontierDeletes: Seq[String] = Nil, // merge-on-read delete files
       seedCounts: Seq[String] = Nil, // per-seed live-row count deltas
@@ -101,7 +104,7 @@ final class FrontierStore(val workDir: String) {
     */
   def commit(wave: Int, frontier: Seq[String], seen: Seq[String],
              hostState: Seq[String], counters: Seq[String],
-             frontierRows: Long = -1L, bloom: Seq[String] = Nil,
+             frontierRows: Long = -1L,
              waveCounters: Map[String, Long] = Map.empty,
              frontierDeletes: Seq[String] = Nil,
              atVersion: Option[Int] = None,
@@ -123,7 +126,6 @@ final class FrontierStore(val workDir: String) {
     put("seen", seen)
     put("host_state", hostState)
     put("counters", counters)
-    put("bloom", bloom)
     val wc = node.putObject("wave_counters")
     waveCounters.foreach { case (k, v) => wc.put(k, v) }
     val tmp = snapDir.resolve(f".v$version%05d.json.tmp-${java.util.UUID.randomUUID()}")
@@ -138,7 +140,7 @@ final class FrontierStore(val workDir: String) {
         throw new FrontierStore.CommitConflict(version)
     } finally Files.deleteIfExists(tmp)
     Snapshot(version, wave, frontier, seen, hostState, counters, frontierRows,
-      bloom, waveCounters, frontierDeletes, seedCounts, isCompaction)
+      Nil, waveCounters, frontierDeletes, seedCounts, isCompaction)
   }
 
   /** Fresh parquet output dir for a table at a wave. */
@@ -192,23 +194,33 @@ final class FrontierStore(val workDir: String) {
   def readFrontier(spark: SparkSession, snap: Snapshot): DataFrame =
     readFrontierAt(spark, snap.frontier, snap.frontierDeletes)
 
-  /** Drop data dirs not referenced by the latest snapshot (GC). Call only
-    * on a quiescent store: CrawlLoop.run() waits for its background
-    * compactor before returning, but a vacuum racing an EXTERNAL writer's
-    * in-flight rewrite could collect that writer's not-yet-committed dirs
-    * (the usual snapshot-GC caveat; Iceberg solves it with retention
-    * windows, which a single-driver sandbox does not need).
+  /** Drop data not referenced by the latest snapshot (GC). A path the
+    * manifest lists is kept whole; a dir that only CONTAINS listed paths
+    * (a wave's row_type-partitioned delta dir) keeps just those, so a
+    * subset no later manifest lists — an older wave's host state, or a
+    * table a newer writer no longer keeps — is collected with the rest.
+    * Call only on a quiescent store: CrawlLoop.run() waits for its
+    * background compactor before returning, but a vacuum racing an
+    * EXTERNAL writer's in-flight rewrite could collect that writer's
+    * not-yet-committed dirs (the usual snapshot-GC caveat; Iceberg solves
+    * it with retention windows, which a single-driver sandbox does not
+    * need).
     */
   def vacuum(): Unit = latest.foreach { snap =>
     val live = (snap.frontier ++ snap.frontierDeletes ++ snap.seen ++
       snap.hostState ++ snap.counters ++ snap.bloom ++ snap.seedCounts)
-      .map(p => dataDir.relativize(Paths.get(p)).getName(0).toString).toSet
-    val stale = {
-      val s = Files.list(dataDir)
-      try s.iterator().asScala.toSeq.filterNot(p => live.contains(p.getFileName.toString))
-      finally s.close()
+      .map(p => dataDir.relativize(Paths.get(p))).toSet
+    def sweep(dir: Path): Unit = {
+      val s = Files.list(dir)
+      val entries = try s.iterator().asScala.toSeq finally s.close()
+      entries.foreach { p =>
+        val rel = dataDir.relativize(p)
+        if (live.contains(rel)) ()
+        else if (live.exists(_.startsWith(rel))) sweep(p)
+        else deleteRecursively(p)
+      }
     }
-    stale.foreach(deleteRecursively)
+    sweep(dataDir)
   }
 
   private def deleteRecursively(p: Path): Unit = {

@@ -3,7 +3,7 @@ package graft.loop
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.conf.ZenoConf
-import graft.frontier.{BloomShards, FrontierStore}
+import graft.frontier.FrontierStore
 import graft.model.CounterRow
 import graft.spark.Udfs
 import graft.wave.Wave
@@ -172,28 +172,8 @@ final class CrawlLoop(
     val seenDf = store.readTable(spark, snap.seen, FrontierStore.seenDdl)
     val hostDf = store.readTable(spark, snap.hostState, FrontierStore.hostStateDdl)
 
-    // partitioned Bloom seen-filter shards (north-star): referenced as a
-    // DataFrame and cogrouped on host_bucket — nothing collects. The layer
-    // list (base + per-wave deltas) carries forward; this wave appends its
-    // own delta below.
-    val bloomBase: Seq[String] =
-      if (!conf.useBloomSeenFilter) Nil
-      else if (snap.bloom.nonEmpty) snap.bloom
-      else if (snap.seen.nonEmpty) {
-        // resume into a store without shards: rebuild from the full seen set
-        val rebuilt = BloomShards.build(spark,
-          seenDf, conf.bloomExpectedPerShard, conf.bloomFpp)
-        val dir = store.newTableDir(wave, "bloom-rebuild")
-        rebuilt.write.mode("overwrite").parquet(dir)
-        Seq(dir)
-      } else Nil
-    val bloomRef: Option[BloomShards.Ref] =
-      if (bloomBase.isEmpty) None
-      else Some(BloomShards.Ref(bloomBase.mkString(","),
-        store.readTable(spark, bloomBase, BloomShards.ShardDdl))) // fresh store: nothing seen yet — exact lookup is a no-op
-
     val logs = Wave.run(spark, conf, wave, frontierDf, seenDf, hostDf,
-      web, robots, bloomRef, checkSeenAtClaim = firstStep)
+      web, robots, checkSeenAtClaim = firstStep)
     firstStep = false
 
     val dirs = Map(
@@ -224,7 +204,7 @@ final class CrawlLoop(
     // phase-2: ONE union-schema delta write per wave. The frontier is
     // never rewritten — the wave contributes row_type-partitioned subsets
     // (add = enqueue rows, del = claimed keys, seen = processed hashes,
-    // host = rate-limiter state, bloom = this wave's delta shards), each
+    // host = rate-limiter state, seedcnt = per-seed live-row deltas), each
     // referenced from the manifest as its own table path. Fusing five
     // writes into one job cuts the per-wave driver-serial floor that caps
     // N→4N scaling efficiency.
@@ -235,25 +215,18 @@ final class CrawlLoop(
     val claimedLog = waveLog.filter($"row_type" === "claimed")
     val candLog = waveLog.filter($"row_type" === "cand")
     val fin =
-      Wave.finish(spark, conf, wave, frontierDf, seenDf, claimedLog, candLog, bloomRef)
+      Wave.finish(spark, conf, wave, frontierDf, seenDf, claimedLog, candLog)
 
     val deletes = claimedLog.select($"url_canon",
       graft.spark.LongParam.col(wave.toLong).as("del_wave"))
     val hostNext = Wave.nextHostState(spark, conf, wave, hostDf, claimedLog)
-    // per-wave Bloom DELTA shards: one small filter per bucket this wave
-    // touched (write/shuffle bytes ∝ wave size — a full shard merge would
-    // move the entire filter set, ~12 GB/wave at 10^10 seen). Layers fold
-    // only when the list fragments, from the already-compacted seen table.
-    val bloomNext: Option[DataFrame] =
-      if (!conf.useBloomSeenFilter) None
-      else Some(BloomShards.buildDelta(spark, fin.seenAppend, conf.bloomFpp))
     // per-seed live-row count delta: −1 per claim, +1 per enqueue — ONE
     // map-side-combinable aggregation over the union (not one shuffle each)
     val seedDelta = claimedLog.select($"seed_id", lit(-1L).as("d"))
       .unionByName(fin.enqueued.select($"seed_id", lit(1L).as("d")))
       .groupBy($"seed_id").agg(sum($"d").as("cnt"))
     // resume into a store without count history: rebuild the baseline from
-    // the live view once (same seam as the bloom rebuild)
+    // the live view once
     val seedCountBase: Seq[String] =
       if (snap.seedCounts.nonEmpty) snap.seedCounts
       else {
@@ -268,7 +241,7 @@ final class CrawlLoop(
     val delta = CrawlLoop.unionBySchema(
       Seq("add" -> FrontierStore.encodeFrontier(fin.enqueued), "del" -> deletes,
         "seen" -> fin.seenAppend,
-        "host" -> hostNext, "seedcnt" -> seedDelta) ++ bloomNext.map("bloom" -> _))
+        "host" -> hostNext, "seedcnt" -> seedDelta))
 
     val obsEnq = new org.apache.spark.sql.Observation(s"delta-$wave")
     timed("delta-write") {
@@ -341,12 +314,10 @@ final class CrawlLoop(
     val valveFired =
       dataPaths.length + delPaths.length > valve ||
         (snap.seen ++ sub("seen")).length > valve ||
-        (seedCountBase ++ sub("seedcnt")).length > valve ||
-        (bloomBase ++ sub("bloom")).length > valve
-    val (fPaths, fDelPaths, seenPathsV, bloomPathsV, seedPathsV) =
+        (seedCountBase ++ sub("seedcnt")).length > valve
+    val (fPaths, fDelPaths, seenPathsV, seedPathsV) =
       if (!valveFired)
-        (dataPaths, delPaths, snap.seen ++ sub("seen"),
-          bloomBase ++ sub("bloom"), seedCountBase ++ sub("seedcnt"))
+        (dataPaths, delPaths, snap.seen ++ sub("seen"), seedCountBase ++ sub("seedcnt"))
       else timed("valve-compact") {
         val f = store.newTableDir(wave, "frontier-compact")
         FrontierStore.encodeFrontier(store.readFrontierAt(spark, dataPaths, delPaths))
@@ -357,22 +328,12 @@ final class CrawlLoop(
           .groupBy($"url_hash", $"host_bucket").agg(max($"kind").as("kind"))
           .select($"url_hash", $"kind", $"host_bucket")
           .write.mode("overwrite").parquet(se)
-        val bl =
-          if (!conf.useBloomSeenFilter) Nil
-          else {
-            val folded = store.newTableDir(wave, "bloom-fold")
-            BloomShards.build(spark,
-              store.readTable(spark, Seq(se), FrontierStore.seenDdl),
-              conf.bloomExpectedPerShard, conf.bloomFpp)
-              .write.mode("overwrite").parquet(folded)
-            Seq(folded)
-          }
         val sc = store.newTableDir(wave, "seedcnt-compact")
         store.readTable(spark, seedCountBase ++ sub("seedcnt"), FrontierStore.seedCountDdl)
           .groupBy($"seed_id").agg(sum($"cnt").as("cnt"))
           .filter($"cnt" > 0)
           .write.mode("overwrite").parquet(sc)
-        (Seq(f), Nil: Seq[String], Seq(se), bl, Seq(sc))
+        (Seq(f), Nil: Seq[String], Seq(se), Seq(sc))
       }
 
     val wcMap = Map(
@@ -392,18 +353,16 @@ final class CrawlLoop(
       val l = store.latest.getOrElse(snap)
       val base =
         if (l.version != snap.version && l.isCompaction && !valveFired) l else snap
-      val (cF, cD, cSe, cBl, cSc) =
+      val (cF, cD, cSe, cSc) =
         if (valveFired || base.version == snap.version)
-          (fPaths, fDelPaths, seenPathsV, bloomPathsV, seedPathsV)
+          (fPaths, fDelPaths, seenPathsV, seedPathsV)
         else (
           base.frontier ++ sub("add"),
           base.frontierDeletes ++ sub("del"),
           base.seen ++ sub("seen"),
-          (if (base.bloom.nonEmpty) base.bloom else bloomBase) ++ sub("bloom"),
           (if (base.seedCounts.nonEmpty) base.seedCounts else seedCountBase)
             ++ sub("seedcnt"))
-      try committed = Some(store.commit(wave, cF, cSe, hostPaths, Nil, newRows,
-        if (conf.useBloomSeenFilter) cBl else Nil, wcMap,
+      try committed = Some(store.commit(wave, cF, cSe, hostPaths, Nil, newRows, wcMap,
         frontierDeletes = cD, atVersion = Some(l.version + 1), seedCounts = cSc))
       catch { case _: FrontierStore.CommitConflict => () } // re-read, retry
     }
@@ -432,7 +391,7 @@ final class CrawlLoop(
   private def maybeCompact(s: store.Snapshot): Unit = {
     val t = CrawlLoop.compactThreshold
     val fragmented = s.frontier.length + s.frontierDeletes.length > t ||
-      s.seen.length > t || s.seedCounts.length > t || s.bloom.length > t
+      s.seen.length > t || s.seedCounts.length > t
     if (!fragmented || compactionInFlight.exists(!_.isCompleted)) return
     implicit val ec: scala.concurrent.ExecutionContext = CrawlLoop.waveEc
     compactionInFlight = Some(scala.concurrent.Future {
@@ -446,9 +405,7 @@ final class CrawlLoop(
   /** Rewrite the fragmented tables of snapshot `s` into folded form, then
     * commit with a CAS-rebase loop. All rewrites preserve the live view
     * exactly: frontier folds its delete files in, seen collapses to
-    * (url_hash, max kind), seed counts fold their ± deltas, the Bloom base
-    * is rebuilt from the folded seen rows (delta layers of differing
-    * filter sizes cannot merge bitwise).
+    * (url_hash, max kind), seed counts fold their ± deltas.
     */
   private def compactFrom(s: store.Snapshot): Unit = {
     val w = s.wave
@@ -472,15 +429,6 @@ final class CrawlLoop(
           .write.mode("overwrite").parquet(d)
         Seq(d)
       }
-    val bloomDirs =
-      if (!conf.useBloomSeenFilter || s.bloom.isEmpty) Nil
-      else {
-        val d = store.newTableDir(w, "bg-bloom-fold")
-        BloomShards.build(spark, store.readTable(spark, Seq(seenDir), FrontierStore.seenDdl),
-          conf.bloomExpectedPerShard, conf.bloomFpp)
-          .write.mode("overwrite").parquet(d)
-        Seq(d)
-      }
 
     // CAS-rebase commit: swap s's file lists for the folded dirs, keep
     // every path added after s. Abort if anything of s's lists has already
@@ -492,17 +440,14 @@ final class CrawlLoop(
       def subsetOk(a: Seq[String], b: Seq[String]) = a.toSet.subsetOf(b.toSet)
       if (!subsetOk(s.frontier, l.frontier) ||
           !subsetOk(s.frontierDeletes, l.frontierDeletes) ||
-          !subsetOk(s.seen, l.seen) || !subsetOk(s.seedCounts, l.seedCounts) ||
-          !subsetOk(s.bloom, l.bloom)) return
+          !subsetOk(s.seen, l.seen) || !subsetOk(s.seedCounts, l.seedCounts)) return
       def rebase(folded: Seq[String], old: Seq[String], cur: Seq[String]) =
         folded ++ cur.filterNot(old.toSet)
       try {
         store.commit(l.wave,
           rebase(Seq(fDir), s.frontier, l.frontier),
           rebase(Seq(seenDir), s.seen, l.seen),
-          l.hostState, Nil, l.frontierRows,
-          rebase(bloomDirs, s.bloom, l.bloom),
-          Map.empty,
+          l.hostState, Nil, l.frontierRows, Map.empty,
           frontierDeletes = l.frontierDeletes.filterNot(s.frontierDeletes.toSet),
           atVersion = Some(l.version + 1),
           seedCounts = rebase(seedDirs, s.seedCounts, l.seedCounts),

@@ -109,8 +109,8 @@ object CrawlBenchChild {
       Corpus.pageUrl(h, j)
     }
     // plan-shape pre-warm on a TINY throwaway corpus, 2 waves: wave ≥2
-    // plans differ structurally from wave 1 (delete masks, bloom layers,
-    // seed-count deltas exist only after a wave has committed), so a
+    // plans differ structurally from wave 1 (delete masks and seed-count
+    // deltas exist only after a wave has committed), so a
     // 1-wave warmup leaves the steady-state shape's whole-stage codegen
     // uncompiled — measured ~1.4 s of pure driver-serial re-Janino per
     // timed run. Two waves here compile BOTH shapes for a few seconds of

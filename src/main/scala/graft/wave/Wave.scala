@@ -35,10 +35,9 @@ import graft.spark.Udfs
   *    WavePlanSpec asserts no Exchange ever sits above the corpus scan in
   *    either mode and that both modes agree on counters + seen set.
   *  - the seen set NEVER shuffles and is never re-aggregated globally: the
-  *    exact check is seen ⋈ broadcast(candidate hashes) INNER (seen
-  *    streams scan-side, column-pruned to url_hash/kind), aggregated to a
-  *    tiny (url_hash, max kind) lookup that broadcasts back to the
-  *    candidates. Bloom shards pre-shrink the candidate hash set.
+  *    exact check is seen ⋉ broadcast(candidate hashes) (seen streams
+  *    scan-side, column-pruned to url_hash/kind), aggregated to a tiny
+  *    (url_hash, max kind) lookup that broadcasts back to the candidates.
   *  - the log writes double as checkpoint lineage AND cut re-computation;
   *    nothing collects to the driver except counters.
   */
@@ -152,14 +151,6 @@ object Wave {
       cached: Seq[DataFrame]
   )
 
-  /** Exact seen lookup WITHOUT shuffling or re-aggregating the seen set:
-    * seen streams scan-side (column-pruned to url_hash/kind) through an
-    * inner/semi join against the broadcast candidate hashes; only the
-    * matches — bounded by |keys| — are aggregated to (url_hash, max kind).
-    * The result is small enough to broadcast back to the candidates.
-    * Max-kind realizes the asset→seed promotion rule: "seed" > "redirect"
-    * > "asset" lexically, matching seencheck.go:110-115.
-    */
   /** True when the corpus scan carries a bucket spec on `url` (registered
     * catalog table, Corpus.write layout) — the fetch join then co-locates
     * via the bucketing instead of a driver-built broadcast.
@@ -174,6 +165,14 @@ object Wave {
         }
     }.getOrElse(false)
 
+  /** Exact seen lookup WITHOUT shuffling or re-aggregating the seen set:
+    * seen streams scan-side (column-pruned to url_hash/kind) through a
+    * semi join against the broadcast candidate hashes; only the matches —
+    * bounded by |keys| — are aggregated to (url_hash, max kind). The
+    * result is small enough to broadcast back to the candidates.
+    * Max-kind realizes the asset→seed promotion rule: "seed" > "redirect"
+    * > "asset" lexically, matching seencheck.go:110-115.
+    */
   def seenLookup(seen: DataFrame, keys: DataFrame): DataFrame =
     seen
       // no .distinct() on the keys: the broadcast hash build dedupes
@@ -190,7 +189,6 @@ object Wave {
       hostState: DataFrame, // penalties
       web: DataFrame, // merged corpus (url, warc_ts, html, text, lang, status_code, content_type, server, link_header, location)
       robots: Map[String, Seq[(String, Boolean)]],
-      bloom: Option[graft.frontier.BloomShards.Ref] = None,
       checkSeenAtClaim: Boolean = true
   ): WaveLogs = {
     import spark.implicits._
@@ -240,8 +238,8 @@ object Wave {
     // ---- seencheck at claim (J3). In steady state the enqueue-time
     //      pruning (finish()) guarantees claimed rows were never seen, so
     //      the check runs only on the FIRST wave after open/resume (stale-
-    //      snapshot guard). Bloom shards pre-shrink the lookup key set;
-    //      bloom-negatives simply miss the broadcast lookup (null kind) ----
+    //      snapshot guard). Unseen keys simply miss the broadcast lookup
+    //      (null kind) ----
     val checkKind = when($"kind" === "seed", "seed").otherwise("asset")
     val hashed = claimed
       .withColumn("url_hash", Udfs.fnv64($"url_canon"))
@@ -258,12 +256,7 @@ object Wave {
     val checked =
       if (!checkSeenAtClaim) hashed.withColumn("is_seen", lit(false))
       else {
-        // bloom pre-shrink on narrow keys (cogroup — filter bytes touched
-        // once per bucket, not per row); bloom-negatives simply miss the
-        // broadcast lookup and stay is_seen = false
-        val maybeKeys = graft.frontier.BloomShards.maybeSeenKeys(
-          hashed.select($"url_hash", $"host_bucket"), bloom)
-        val lookup = seenLookup(seen, maybeKeys)
+        val lookup = seenLookup(seen, hashed)
         hashed.join(broadcast(lookup), Seq("url_hash"), "left")
           .withColumn("is_seen",
             $"seen_kind".isNotNull &&
@@ -532,8 +525,7 @@ object Wave {
       frontier: DataFrame, // merge-on-read view (for the J2 anti-join)
       seen: DataFrame, // raw append-only (url_hash, kind, host_bucket)
       claimedLog: DataFrame,
-      candidateLog: DataFrame,
-      bloom: Option[graft.frontier.BloomShards.Ref] = None
+      candidateLog: DataFrame
   ): FinishResult = {
     import spark.implicits._
     val domainsUdf = Udfs.domainsMatch(conf)
@@ -589,18 +581,16 @@ object Wave {
     //      The frontier semi and the seen lookup probe with the SAME key
     //      set (the broadcast hash builds dedupe the multiset), so the two
     //      big-table scans are INDEPENDENT subtrees off one shared
-    //      broadcast build, and with bloom disabled the identical
-    //      Project(url_hash) child lets ReuseExchange collapse the two
-    //      builds into one. The key builds re-read the written log with
-    //      href/chost-only pruned scans — cheaper than materializing the
-    //      candidate multiset into the block store.
+    //      broadcast build: the identical Project(url_hash) child lets
+    //      ReuseExchange collapse the two builds into one (WavePlanSpec
+    //      pins the ReusedExchange). The key build re-reads the written
+    //      log with an href/chost-only pruned scan — cheaper than
+    //      materializing the candidate multiset into the block store.
     val pendingHits = frontier.select($"url_canon")
       .withColumn("url_hash", Udfs.fnv64($"url_canon"))
       .join(broadcast(cand.select($"url_hash")), Seq("url_hash"), "left_semi")
       .select($"url_canon")
-    val maybeKeys = graft.frontier.BloomShards.maybeSeenKeys(
-      cand.select($"url_hash", $"host_bucket"), bloom)
-    val lookup = seenLookup(seen, maybeKeys)
+    val lookup = seenLookup(seen, cand)
     val unseen = cand
       .join(broadcast(lookup), Seq("url_hash"), "left")
       .filter($"seen_kind".isNull ||
@@ -655,13 +645,6 @@ object Wave {
 
     FinishResult(unique, seenAppend, Seq(dedupedBatch))
   }
-
-  /** Collapse the append-only seen table to one kind per hash
-    * ("seed" wins — lexically max). Used by compaction only — the per-wave
-    * path uses [[seenLookup]] and never re-aggregates the full history.
-    */
-  def seenKinds(seen: DataFrame): DataFrame =
-    seen.groupBy(col("url_hash")).agg(max(col("kind")).as("seen_kind"))
 
   /** Host-state evolution after a wave (R2 penalties / R3 recovery,
     * wave-discretized; adjust.go:9-60).

@@ -167,54 +167,78 @@ class EngineSpec extends AnyFunSuite {
     assert(hs(0).getAs[Int]("failure_count") == 1)
   }
 
-  test("resume from snapshot equals uninterrupted run") {
+  private def crawlState(l: CrawlLoop) = (
+    l.frontier.select("url_canon").collect().map(_.getString(0)).toSet,
+    l.seen.select("url_hash").collect().map(_.getLong(0)).toSet)
+
+  /** Crawls a 12-page ring over 3 hosts twice from one seed: 4 waves
+    * uninterrupted, and 2 waves, then `between(loop)`, then 2 more from a
+    * reopened loop. Returns both final loops and counters.
+    */
+  private def resumeAfterTwoWaves(between: CrawlLoop => Unit) = {
     val corpus = tmpDir("corpus")
-    val pages = (0 until 12).map { i =>
+    writeCorpus(corpus, (0 until 12).map { i =>
       page(s"http://h${i % 3}.com/p$i",
         Seq(s"http://h${(i + 1) % 3}.com/p${(i + 1) % 12}", s"/p${(i + 5) % 12}"))
-    }
-    writeCorpus(corpus, pages)
+    })
     val seeds = Seq("http://h0.com/p0")
-
-    // uninterrupted: 4 waves
     val loopA = new CrawlLoop(spark, testConf, tmpDir("storeA"), corpus, Map.empty)
     loopA.init(seeds)
-    loopA.run(4)
+    val countersA = loopA.run(4)
 
-    // interrupted: 2 waves, reopen, 2 more
     val storeB = tmpDir("storeB")
     val loopB1 = new CrawlLoop(spark, testConf, storeB, corpus, Map.empty)
     loopB1.init(seeds)
-    loopB1.run(2)
+    val countersB1 = loopB1.run(2)
+    between(loopB1)
     val loopB2 = new CrawlLoop(spark, testConf, storeB, corpus, Map.empty)
     loopB2.init(seeds) // no-op on resume
-    loopB2.run(2)
-
-    def state(l: CrawlLoop) = (
-      l.frontier.select("url_canon").collect().map(_.getString(0)).toSet,
-      l.seen.select("url_hash").collect().map(_.getLong(0)).toSet)
-    assert(state(loopA) == state(loopB2), "resumed crawl must equal uninterrupted crawl")
+    val countersB2 = loopB2.run(2)
+    (loopA, countersA, loopB2, countersB1 ++ countersB2)
   }
 
-  test("bloom seen-filter is result-equivalent to exact-only path") {
-    val corpus = tmpDir("corpus")
-    val pages = (0 until 20).map { i =>
-      page(s"http://h${i % 4}.com/p$i",
-        Seq(s"http://h${(i + 1) % 4}.com/p${(i + 3) % 20}", s"/p${(i + 7) % 20}"))
+  test("resume from snapshot equals uninterrupted run") {
+    val (loopA, countersA, loopB, countersB) = resumeAfterTwoWaves(_ => ())
+    assert(countersB == countersA)
+    assert(crawlState(loopB) == crawlState(loopA),
+      "resumed crawl must equal uninterrupted crawl")
+  }
+
+  test("resume from a store whose manifest lists Bloom seen-filter shards") {
+    import java.nio.file.{Files, Paths}
+    import com.fasterxml.jackson.databind.ObjectMapper
+    import com.fasterxml.jackson.databind.node.ObjectNode
+    val mapper = new ObjectMapper()
+    def manifest(loop: CrawlLoop) =
+      Paths.get(loop.store.workDir, "snapshots", f"v${loop.store.latest.get.version}%05d.json")
+    // stores written while the seen check had a Bloom pre-filter carry one
+    // (host_bucket, bloom) shard subset per wave in that wave's delta dir,
+    // listed under "bloom" in every manifest
+    def shardDirs(loop: CrawlLoop) = Seq(1, 2).map(w =>
+      f"${loop.store.workDir}/data/w$w%05d-delta/row_type=bloom")
+    val (loopA, countersA, loopB, countersB) = resumeAfterTwoWaves { loop =>
+      shardDirs(loop).foreach(d => spark.range(4)
+        .selectExpr("cast(id as int) as host_bucket",
+          "cast(cast(id as string) as binary) as bloom")
+        .write.parquet(d))
+      val node = mapper.readTree(Files.readAllBytes(manifest(loop)))
+        .asInstanceOf[ObjectNode]
+      val list = node.putArray("bloom")
+      shardDirs(loop).foreach(list.add)
+      Files.write(manifest(loop), mapper.writeValueAsBytes(node))
+      assert(loop.store.latest.get.bloom == shardDirs(loop))
     }
-    writeCorpus(corpus, pages)
-    val seeds = Seq("http://h0.com/p0", "http://h1.com/p1")
-    def runWith(bloom: Boolean) = {
-      val loop = new CrawlLoop(spark,
-        testConf.copy(useBloomSeenFilter = bloom, bloomExpectedPerShard = 1000),
-        tmpDir(s"store-$bloom"), corpus, Map.empty)
-      loop.init(seeds)
-      val cs = loop.run(5)
-      (cs.map(c => (c.claimed, c.fetched, c.deduped, c.queued)),
-        loop.frontier.select("url_canon").collect().map(_.getString(0)).toSet,
-        loop.seen.select("url_hash").collect().map(_.getLong(0)).toSet)
-    }
-    assert(runWith(bloom = true) == runWith(bloom = false))
+    assert(countersB == countersA)
+    assert(crawlState(loopB) == crawlState(loopA),
+      "resumed crawl must reach the uninterrupted frontier and seen set")
+
+    assert(!mapper.readTree(Files.readAllBytes(manifest(loopB))).has("bloom"),
+      "a new manifest lists no Bloom shards")
+    assert(shardDirs(loopB).forall(d => Files.exists(Paths.get(d))))
+    loopB.store.vacuum()
+    assert(shardDirs(loopB).forall(d => !Files.exists(Paths.get(d))),
+      "vacuum collects the shard subsets no manifest lists any more")
+    assert(crawlState(loopB) == crawlState(loopA), "vacuum keeps every live table")
   }
 
   test("auto-finish on drained frontier") {

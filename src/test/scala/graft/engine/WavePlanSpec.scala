@@ -2,9 +2,14 @@ package graft.engine
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.LeftSemi
+import org.apache.spark.sql.execution.{InputAdapter, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import graft.conf.ZenoConf
-import graft.frontier.{BloomShards, FrontierStore}
+import graft.frontier.FrontierStore
 import graft.gen.{Corpus, OracleData}
 import graft.loop.CrawlLoop
 import graft.spark.PlanShapes
@@ -39,6 +44,26 @@ class WavePlanSpec extends AnyFunSuite {
         bad.map(_.nodeName).mkString("\n"))
   }
 
+  /** Every node of an executed plan, descending into each adaptive
+    * plan's FINAL plan (where reused exchanges appear) and into cached
+    * relations.
+    */
+  private def finalPlanNodes(p: SparkPlan): Seq[SparkPlan] = {
+    val kids = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case im: InMemoryTableScanExec => Seq(im.relation.cachedPlan)
+      case _ => p.children
+    }
+    p +: (kids ++ p.subqueries).flatMap(finalPlanNodes)
+  }
+
+  private def stageBody(p: SparkPlan): SparkPlan = p match {
+    case q: QueryStageExec => stageBody(q.plan)
+    case i: InputAdapter => stageBody(i.child)
+    case _ => p
+  }
+
   test("first wave (seen check at claim): corpus never shuffles") {
     OracleData.ensure(spark)
     val work = tmpDir("planspec1")
@@ -51,12 +76,12 @@ class WavePlanSpec extends AnyFunSuite {
     val host = loop.store.readTable(spark, snap.hostState, FrontierStore.hostStateDdl)
     val web = spark.read.parquet(s"${OracleData.Dir}/web")
     val logs = Wave.run(spark, conf, 1, frontier, seen, host, web, robots,
-      None, checkSeenAtClaim = true)
+      checkSeenAtClaim = true)
     corpusUnshuffled(logs.unified, "wave-1 unified log")
     logs.cached.foreach(_.unpersist())
   }
 
-  test("steady-state wave with bloom + MOR deletes: corpus and seen plan shapes") {
+  test("steady-state wave with MOR deletes: plan shapes, one shared key build") {
     OracleData.ensure(spark)
     val work = tmpDir("planspec2")
     val conf = ZenoConf(maxHops = 2)
@@ -70,20 +95,24 @@ class WavePlanSpec extends AnyFunSuite {
     val seen = loop.store.readTable(spark, snap.seen, FrontierStore.seenDdl)
     val host = loop.store.readTable(spark, snap.hostState, FrontierStore.hostStateDdl)
     val web = spark.read.parquet(s"${OracleData.Dir}/web")
-    val bloom = Some(BloomShards.Ref(snap.bloom.mkString(","),
-      loop.store.readTable(spark, snap.bloom, BloomShards.ShardDdl)))
 
     val logs = Wave.run(spark, conf, 3, frontier, seen, host, web, robots,
-      bloom, checkSeenAtClaim = false)
+      checkSeenAtClaim = false)
     corpusUnshuffled(logs.unified, "wave-3 unified log")
     assert(PlanShapes.flatten(logs.unified.queryExecution.executedPlan)
       .exists(_.nodeName.contains("WindowGroupLimit")),
       "claim must keep the map-side per-host top-k (WindowGroupLimit)")
 
-    // finish-phase plan: seen reached only through a broadcast join
+    // finish-phase plan over the WRITTEN log, as CrawlLoop.step builds it
+    val logDir = tmpDir("planspec2-log")
+    Wave.encodeLog(logs.unified).write.mode("overwrite").parquet(logDir)
+    val waveLog = Wave.decodeLog(spark.read
+      .schema(Wave.encodedLogSchema(logs.unified.schema)).parquet(logDir))
     val fin = Wave.finish(spark, conf, 3, frontier, seen,
-      logs.claimedLog, logs.candidateLog, bloom)
+      waveLog.filter(waveLog("row_type") === "claimed"),
+      waveLog.filter(waveLog("row_type") === "cand"))
     val finPlan = fin.enqueued.queryExecution.executedPlan
+    // seen reached only through a broadcast join
     PlanShapes.firstJoinOrShuffleAboveScan(finPlan, "row_type=seen") match {
       case Some(_: BroadcastHashJoinExec) => // seen streams scan-side: OK
       case Some(other) => fail(
@@ -103,6 +132,29 @@ class WavePlanSpec extends AnyFunSuite {
     assert(frontierShuffles.isEmpty,
       "frontier must never shuffle in the finish plan; offending:\n" +
         frontierShuffles.map(_.nodeName).mkString("\n"))
+
+    // one exact seen lookup: the seen semi-join probes the very broadcast
+    // of candidate url_hash keys that the frontier semi-join builds.
+    // Exchange reuse happens as adaptive query stages materialize, so the
+    // check reads the final plan after the action.
+    fin.enqueued.collect()
+    val executed = finalPlanNodes(finPlan)
+    assert(!executed.exists(_.nodeName == "CoGroup"),
+      "the finish plan must not cogroup the candidate keys")
+    val semis = executed.collect {
+      case j: BroadcastHashJoinExec if j.joinType == LeftSemi => j
+    }
+    def semiOver(table: String) = semis.filter(j =>
+      finalPlanNodes(j.left).exists(PlanShapes.isScanOf(_, table))) match {
+      case Seq(j) => stageBody(j.right)
+      case js => fail(s"expected one semi-join streaming $table, got ${js.size}")
+    }
+    val builds = Seq(semiOver("row_type=seen"), semiOver("-frontier"))
+    val reused = builds.collect { case r: ReusedExchangeExec => r.child.canonicalized }
+    val built = builds.collect { case b: BroadcastExchangeExec => b.canonicalized }
+    assert(reused.size == 1 && reused == built,
+      "seen and frontier semi-joins must share one key broadcast (one a " +
+        s"ReusedExchange), got ${builds.map(_.nodeName).mkString(" and ")}")
     (logs.cached ++ fin.cached).foreach(_.unpersist())
   }
 
@@ -183,7 +235,7 @@ class WavePlanSpec extends AnyFunSuite {
     val seen = probe.store.readTable(spark, snap.seen, FrontierStore.seenDdl)
     val host = probe.store.readTable(spark, snap.hostState, FrontierStore.hostStateDdl)
     val logs = Wave.run(spark, conf, 1, frontier, seen, host, probe.web, rb,
-      None, checkSeenAtClaim = true)
+      checkSeenAtClaim = true)
     val plan = logs.unified.queryExecution.executedPlan
     val bad = PlanShapes.shufflesAbove(plan, "/web")
     assert(bad.isEmpty, "bucketed corpus must never shuffle; offending:\n" +
